@@ -88,11 +88,8 @@ def _entries(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _all_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # fused single-scan plan: one corpus read, zero exchanges (the
-    # composed all_triples(spans, entries) scans + parses twice and
-    # shuffles for the tabulate/sentence windows); equivalence with the
-    # composed path is pinned by tests/test_triples_fused.py and the
-    # shared DuckDB oracle
+    # fused single-scan plan: one corpus read, zero exchanges; the
+    # DuckDB oracle (all_triples_sql) is its reference
     return triples.all_triples_fused(_docs(spark, sf_dir))
 
 
@@ -133,21 +130,18 @@ def q_span_invariant(spark, sf_dir):
     )
 
 
+def _docs_m(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Documents WITHOUT the loader's doc_id repartition — for the
+    in-row per-document operators, which need no shuffle at all."""
+    return tables.load_documents_spans(spark, sf_dir, repartition=False)
+
+
 def q_doc_stats(spark, sf_dir):
-    # round-7 in-row form: the documents table is already one row per
-    # doc, so the staged explode+groupBy shuffled the corpus to rebuild
-    # state it started with; zero exchanges now (equivalence pinned in
-    # tests/test_segment_fused.py)
-    return segment.doc_stats_docs(
-        tables.load_documents_spans(spark, sf_dir, repartition=False)
-    )
+    return segment.doc_stats(_docs_m(spark, sf_dir))
 
 
 def q_reassemble_text(spark, sf_dir):
-    # round-7 in-row form — same rationale as q_doc_stats
-    return segment.reassemble_text_docs(
-        tables.load_documents_spans(spark, sf_dir, repartition=False)
-    )
+    return segment.reassemble_text(_docs_m(spark, sf_dir))
 
 
 def q_table_cells(spark, sf_dir):
@@ -155,10 +149,9 @@ def q_table_cells(spark, sf_dir):
 
 
 def q_relationship_entries(spark, sf_dir):
-    # round-7 fused form: one corpus scan, zero shuffles — the staged
-    # table_cells -> semantic_entries twin stays available as _entries
-    # (used by the triples_table queries) and equivalence is pinned in
-    # tests/test_triples_fused.py
+    # fused form: one corpus scan, zero shuffles (the table_cells ->
+    # semantic_entries composition in _entries feeds the triples_table
+    # queries; both answer to the same DuckDB oracle)
     return triples.semantic_entries_fused(_docs(spark, sf_dir))
 
 
@@ -469,7 +462,7 @@ def q_ner_mentions(spark, sf_dir):
 
 
 def q_classify_documents(spark, sf_dir):
-    doc_text = segment.reassemble_text(_spans(spark, sf_dir)).select(
+    doc_text = segment.reassemble_text(_docs_m(spark, sf_dir)).select(
         "doc_id", F.col("document_text").alias("text")
     )
     return classify.classify_documents(doc_text, "doc_id", "text")
@@ -780,31 +773,11 @@ def q_quarantine_accounting(spark, sf_dir):
 
 
 # ------------------------------------------- grid reconstruction family
-# Since round 7 the three fused queries (assign / spanning / row_maps)
-# run through operators/grid_fused.py: ONE detections scan + ONE
-# per-table aggregation + an Arrow-batched kernel, replacing the staged
-# band-join + theta-join + 4 window shuffles whose cost was interpreted
-# higher-order-function evaluation (OPTIMIZATION_r07.md). The staged
-# operators remain in operators/grid.py and tests/test_grid_fused.py
-# pins row-for-row equivalence on the synthetic corpora; both paths
-# share the same DuckDB oracles.
-def _grid_assigned(spark, sf_dir):
-    # staged twin, kept for the fused-equivalence tests
-    d = tables.load_detections(spark, sf_dir)
-    cells = d.filter(F.col("bucket") == "cell").select(
-        "doc_id", "table_id", F.col("item_id").alias("cell_id"), "x", "y", "w", "h", "text"
-    )
-    return grid.assign_cells_banded(cells, grid.band_arrays(d)), d
-
-
-def _grid_final(spark, sf_dir):
-    assigned, d = _grid_assigned(spark, sf_dir)
-    spans = d.filter(F.col("bucket") == "spanning_cell").select(
-        "doc_id", "table_id", F.col("item_id").alias("span_id"), "x", "y", "w", "h"
-    )
-    return grid.apply_spanning_cells(assigned, spans)
-
-
+# The three per-table queries (assign / spanning / row_maps) run
+# through operators/grid_fused.py: ONE detections scan + ONE per-table
+# aggregation + an Arrow-batched kernel. Their DuckDB oracles
+# (oracles_data.grid_*_sql) are the reference, gated in
+# tests/test_oracles.py.
 def q_grid_bands(spark, sf_dir):
     d = tables.load_detections(spark, sf_dir)
     return grid.index_bands(d, "row").unionByName(grid.index_bands(d, "column")).select(

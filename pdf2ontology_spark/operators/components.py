@@ -4,7 +4,7 @@ self-joins (SURVEY.md §7.2 step 3 — the canonicalization substrate).
 Algorithm: iterative minimum-label propagation — each round every node
 takes the min label over itself and its neighbors; converges in
 O(component diameter) rounds. Alias/near-dup clusters have tiny
-diameters (2-4), so 3-6 rounds suffice in practice; ``max_iter`` guards
+diameters (2-4), so 3-6 rounds suffice in practice; ``MAX_ITER`` guards
 the loop and convergence is detected with a cheap count of changed
 labels.
 
@@ -22,7 +22,7 @@ Scale notes (10^12-node framing):
   global loop: the loop's input shrinks from |E| edges to at most one
   edge per node per partition, and intra-partition chains collapse to
   diameter 2 — at planet scale edges >> nodes, so this is the lever
-  that keeps the iterative joins cheap (``pre_contract=True``).
+  that keeps the iterative joins cheap.
 """
 
 from __future__ import annotations
@@ -32,6 +32,11 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+# min-label rounds before the loop stops (linking graphs converge in 3-6)
+MAX_ITER = 25
+# label tables at or under this many edges carry a broadcast hint
+BROADCAST_THRESHOLD = 100_000
 
 
 def _local_contract(sym: DataFrame) -> DataFrame:
@@ -121,25 +126,22 @@ def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    max_iter: int = 25,
-    pre_contract: bool = True,
     gather_threshold: int = 2_000_000,
-    broadcast_threshold: int = 100_000,
 ) -> DataFrame:
     """edges(src, dst) -> (node, component) where component is the
     minimum node id in the connected component. Nodes appear iff they
     occur in the edge list. Deterministic.
 
-    After the per-partition contraction, the surviving edge count is
-    checked once (a cheap job on the just-materialized list): at or
-    under ``gather_threshold`` edges the components are finished with a
+    The symmetric edge count is checked once (a cheap job on the
+    just-materialized list): at or under ``gather_threshold`` edges the
+    components are finished with a
     single-task union-find (``_gather_components``) — exact, one job,
     no driver-synchronized rounds; above it the iterative min-label
     loop runs as before. Entity-linking bridge graphs are tiny by
     construction (LSH-verified near-dup pairs between exact-group
     reps), so production corpora take the gather path for the final
     step while the heavy lifting stays in the distributed contraction.
-    Results under ``broadcast_threshold`` edges additionally carry a
+    Results under ``BROADCAST_THRESHOLD`` edges additionally carry a
     broadcast hint so the caller's label join skips its shuffle."""
     sym = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
@@ -165,23 +167,22 @@ def connected_components(
         # stage + another distinct round) costs more than the problem —
         # gather the raw edges straight into one union-find task
         labels = _gather_components(sym)
-        if n_edges <= broadcast_threshold:
+        if n_edges <= BROADCAST_THRESHOLD:
             labels = labels.hint("broadcast")
         return labels
-    if pre_contract:
-        star = _local_contract(sym)
-        sym = (
-            star.unionByName(star.select(F.col("b").alias("a"), F.col("a").alias("b")))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
+    star = _local_contract(sym)
+    sym = (
+        star.unionByName(star.select(F.col("b").alias("a"), F.col("a").alias("b")))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
     labels = (
         sym.select(F.col("a").alias("node"))
         .distinct()
         .withColumn("component", F.col("node"))
         .localCheckpoint(eager=True)
     )
-    for _ in range(max_iter):
+    for _ in range(MAX_ITER):
         # neighbor labels: for edge (a,b), b's current label is a candidate for a
         neighbor = (
             sym.join(labels.withColumnRenamed("node", "b"), "b")

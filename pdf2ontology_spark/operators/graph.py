@@ -214,22 +214,6 @@ def nodes(triples: DataFrame) -> DataFrame:
     return nodes_from_surfaces(per_surface(triples))
 
 
-def surface_ids(triples: DataFrame) -> DataFrame:
-    """(name, entity_type, entity_id) for every DISTINCT mention surface.
-
-    The id expression (normalize regexes + sha2) runs once per distinct
-    surface instead of once per triple row — at 8M triples/600k docs
-    that is ~60k evaluations instead of 16M, and the triple-side lookup
-    becomes a join that AQE broadcasts (the surface dim is tiny relative
-    to the fact stream at every scale)."""
-    return (
-        mentions(triples)
-        .select("name", "entity_type")
-        .distinct()
-        .withColumn("entity_id", entity_id_col(F.col("name"), F.col("entity_type")))
-    )
-
-
 def edge_aggs(triples: DataFrame) -> DataFrame:
     """Keyed edge aggregates — the MERGEABLE edge stage: weight sums,
     confidence maxes, evidence is a distributive top-3 and _methods a

@@ -51,27 +51,6 @@ def span_sequence_check(docs: DataFrame) -> DataFrame:
     )
 
 
-def reassemble_text(spans: DataFrame) -> DataFrame:
-    """Cross-span text stitch: the reference's OCR flatten+join
-    (/root/reference/src/loader.py:36-58) — text spans concatenated in
-    reading order per document. One shuffle on doc_id.
-    """
-    return (
-        spans.filter(F.col("kind").isin("text", "title", "header", "caption"))
-        .groupBy("doc_id")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("offset", "text"))),
-                    lambda s: s["text"],
-                ),
-                "\n",
-            ).alias("document_text"),
-            F.count("*").cast("long").alias("n_text_spans"),
-        )
-    )
-
-
 def merged_text_sentences(spans: DataFrame) -> DataFrame:
     """Cross-span content merge (W5 — the reference's CrossPageContent,
     /root/reference/src/pydantic_models/content_models.py:55-82): a text
@@ -122,15 +101,12 @@ def merged_text_sentences(spans: DataFrame) -> DataFrame:
 _TEXT_KINDS = ["text", "title", "header", "caption"]
 
 
-def reassemble_text_docs(docs: DataFrame) -> DataFrame:
-    """In-row twin of ``reassemble_text`` over the raw documents table:
-    the input is already one row per document, so the staged
-    explode -> groupBy(collect_list) round-tripped the whole corpus
-    through a shuffle to rebuild per-document state it started with
-    (round-7, guide §2.4). Same output: text-kind spans sorted by
-    (offset, text) — the staged collect_list struct order — joined with
-    newlines; documents with no text-kind spans emit nothing (the
-    staged groupBy never saw them)."""
+def reassemble_text(docs: DataFrame) -> DataFrame:
+    """Cross-span text stitch: the reference's OCR flatten+join
+    (loader.py:36-58) — text-kind spans of each document sorted by
+    (offset, text) and joined with newlines; a null text contributes
+    ''. Documents with no text-kind spans emit nothing. The input is already one row per document, so this is an
+    in-row array computation: zero shuffles, zero explode."""
     kinds = F.array(*[F.lit(k) for k in _TEXT_KINDS])
     picked = F.filter(
         F.col("spans"), lambda s: F.array_contains(kinds, s["kind"])
@@ -156,11 +132,11 @@ def reassemble_text_docs(docs: DataFrame) -> DataFrame:
     )
 
 
-def doc_stats_docs(docs: DataFrame) -> DataFrame:
-    """In-row twin of ``doc_stats`` over the raw documents table — same
-    rationale as ``reassemble_text_docs``: zero shuffles, zero explode.
-    Documents with no spans emit nothing (the staged explode dropped
-    them)."""
+def doc_stats(docs: DataFrame) -> DataFrame:
+    """Corpus/document statistics — reference's _compile_results
+    (document_analyzer.py:230-272): per-doc span counts by kind plus
+    totals, computed in-row like ``reassemble_text``.
+    Documents with no spans emit nothing."""
     spans = F.col("spans")
 
     def n_kind(kind: str):
@@ -178,18 +154,3 @@ def doc_stats_docs(docs: DataFrame) -> DataFrame:
             lambda acc, s: acc + F.length(F.coalesce(s["text"], F.lit(""))),
         ).alias("total_chars"),
     ).filter(F.col("n_spans") > 0)
-
-
-def doc_stats(spans: DataFrame) -> DataFrame:
-    """Corpus/document statistics — reference's _compile_results
-    (/root/reference/src/core/document_analyzer.py:230-272): per-doc span
-    counts by kind plus totals. Partial/final hash aggregation does the
-    two-level compile for free (SURVEY.md A15).
-    """
-    return spans.groupBy("doc_id").agg(
-        F.count("*").cast("long").alias("n_spans"),
-        F.sum(F.when(F.col("kind") == "table", 1).otherwise(0)).cast("long").alias("n_tables"),
-        F.sum(F.when(F.col("kind") == "media", 1).otherwise(0)).cast("long").alias("n_media"),
-        F.sum(F.when(F.col("kind") == "text", 1).otherwise(0)).cast("long").alias("n_text"),
-        F.sum(F.length(F.coalesce("text", F.lit("")))).cast("long").alias("total_chars"),
-    )

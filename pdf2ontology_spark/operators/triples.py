@@ -113,15 +113,6 @@ def text_triples(spans: DataFrame) -> DataFrame:
     )
 
 
-def all_triples(spans: DataFrame, entries: DataFrame, reference_strict: bool = False) -> DataFrame:
-    """Union of table + text triples (U1 semantics: one DataFrame from
-    the start — the reference's ``all_triplets.extend`` loop collapses to
-    ``unionByName``). Composed from the staged operators — use
-    ``all_triples_fused`` for the single-scan, shuffle-free production
-    plan over the raw documents table."""
-    return table_triples(entries, reference_strict).unionByName(text_triples(spans))
-
-
 # ------------------------------------------------------- fused extraction
 # Field layout of one extracted triple inside the per-document arrays;
 # both branches must emit the exact same struct for concat().
@@ -668,22 +659,23 @@ def all_triples_fused(docs: DataFrame, reference_strict: bool = False) -> DataFr
     table fallback rule and the sentence patterns — are computed per
     document with array expressions inside ONE narrow projection, so
     the physical plan is FileScan -> Project -> Generate(explode) with
-    ZERO exchanges and ONE corpus read. The composed
-    ``all_triples(spans, entries)`` path reads + explodes the corpus
-    once per branch and shuffles for the tabulate windows and the
-    sentence session-window; at 10^12 documents that is the entire
-    corpus scanned twice plus two wide shuffles for work that is
-    per-document local. Row-for-row equivalence with the composed path
-    is pinned by tests/test_triples_fused.py and by sharing the same
-    DuckDB oracle (q:triples_all).
+    ZERO exchanges and ONE corpus read. Composing ``table_triples``
+    and ``text_triples`` over exploded spans instead reads + explodes
+    the corpus once per branch and shuffles for the tabulate windows
+    and the sentence session-window; at 10^12 documents that is the
+    entire corpus scanned twice plus two wide shuffles for work that is
+    per-document local. The DuckDB oracle (q:triples_all) is the
+    reference; tests/test_triples_fused.py also pins row-for-row
+    equality with that composition.
 
     Reference parity: triplet_extractor.py:339-384 (fallback rule),
     SURVEY.md §7.2 step 1 (patterns), content_models.py:55-82 (W5).
 
     The validity contract (the filter inside _fused_triples_expr) is the
     same as quarantine.span_guard_reason() for the kinds this operator
-    consumes: known kind and a present, non-negative offset — so fused
-    output matches the staged pipeline's post-quarantine triples."""
+    consumes: known kind and a present, non-negative offset — so its
+    output equals the composition over the quarantine-good spans
+    (tests/test_pipeline.py)."""
     return (
         docs.select(
             F.col("doc_id"),

@@ -8,11 +8,17 @@ regexes are dialect-portable (no lookaround, no escapes that differ).
 DuckDB notes: regexp_replace needs the 'g' flag for replace-all (Spark
 replaces all by default); numeric literals must be CAST to DOUBLE to
 match Spark's DoubleType.
+
+``duckdb_views``/``compare`` are the Spark-vs-DuckDB comparison shared
+by scripts/check_oracles.py and tests/test_oracles.py.
 """
 
 from __future__ import annotations
 
 import os
+
+import numpy as np
+import pandas as pd
 
 from pdf2ontology_spark import rules, synth
 
@@ -396,3 +402,47 @@ SELECT sha256(subject_id || {US} || predicate || {US} || object_id) AS edge_id,
        subject_id, predicate, object_id, weight, confidence
 FROM agg"""
     )
+
+
+# ------------------------------------------------------ oracle comparison
+def duckdb_views(sf_dir: str):
+    """A DuckDB connection with one view per testdata table of ``sf_dir``."""
+    import duckdb
+
+    from pdf2ontology_spark.sources.tables import DRIVER_TABLES
+
+    con = duckdb.connect()
+    for t in DRIVER_TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    return con
+
+
+def canon(df: pd.DataFrame) -> pd.DataFrame:
+    """Order-insensitive canonical form: sorted columns, values as
+    strings or 6-decimal floats, rows sorted."""
+    df = df.reindex(sorted(df.columns), axis=1)
+    for c in df.columns:
+        if df[c].dtype == object:
+            df[c] = df[c].astype(str)
+        elif np.issubdtype(df[c].dtype, np.datetime64):
+            df[c] = df[c].astype("datetime64[us]").astype(str)
+        elif np.issubdtype(df[c].dtype, np.floating):
+            df[c] = df[c].round(6)
+        else:
+            df[c] = df[c].astype("float64").round(6)
+    return df.sort_values(list(df.columns)).reset_index(drop=True)
+
+
+def compare(got: pd.DataFrame, exp: pd.DataFrame) -> str | None:
+    """None if ``got`` (Spark) equals ``exp`` (DuckDB) in row count,
+    column names and order-insensitive values; else what differs."""
+    if len(got) != len(exp):
+        return f"rows spark={len(got)} duckdb={len(exp)}"
+    if sorted(got.columns) != sorted(exp.columns):
+        return f"cols spark={sorted(got.columns)} duckdb={sorted(exp.columns)}"
+    g, e = canon(got), canon(exp)
+    if g.equals(e):
+        return None
+    bad = ((g != e) & ~(g.isna() & e.isna())).any(axis=1)
+    diffs = pd.concat([g[bad].head(3), e[bad].head(3)], keys=["spark", "duckdb"])
+    return f"{int(bad.sum())}/{len(g)} rows differ; first diffs:\n{diffs}"

@@ -1,7 +1,7 @@
 """The flagship KG-construction pipeline (SURVEY.md §7.1):
 
-documents(spans) -> segment -> tabulate -> semantic entries -> triples
-                -> canonicalized nodes + edges
+documents(spans) -> triples -> canonicalized nodes + edges
+side stages: documents -> segment -> quarantine -> tabulate -> entries
 
 Each arrow is a pure DataFrame transform; with a CheckpointStore the
 stage outputs are persisted and the run resumes idempotently.
@@ -10,7 +10,7 @@ Shuffle budget end-to-end (scale analysis, 1000-executor framing):
 1. segment/explode: narrow — 0 shuffles.
 2. tabulate windows: 1 shuffle on (doc_id, table_id) — all windows share
    the prefix; grids are tiny so no skew.
-3. triples: narrow on top of (2).
+3. triples: narrow — the fused plan reads the documents directly.
 4. nodes/edges: endpoint ids are pure expressions, so only the final
    groupBys shuffle — 1 shuffle each on entity/edge key. Entity keys are
    the classic skew risk (popular entities); AQE skew handling is on,
@@ -75,23 +75,11 @@ def run_kg_pipeline(
     bad_spans = st("quarantine_spans", lambda: rejected)
     cells = st("cells", lambda: tabulate.table_cells(spans))
     entries = st("entries", lambda: tabulate.semantic_entries(cells))
-    if ckpt is None:
-        # no checkpoint store -> nothing materializes between stages, so
-        # the staged union would scan + parse the source corpus twice
-        # and shuffle for the tabulate/sentence windows; the fused plan
-        # is one scan, zero exchanges (tests/test_triples_fused.py pins
-        # equivalence; its span-validity guard matches split_spans)
-        trips = triples.all_triples_fused(docs, reference_strict)
-    else:
-        # resumable path: spans/entries are materialized parquet stages,
-        # so each branch reads the (cheap, local) checkpoint — keep the
-        # staged lineage that idempotent resume depends on
-        trips = st(
-            "triples",
-            lambda: triples.table_triples(entries, reference_strict).unionByName(
-                triples.text_triples(spans)
-            ),
-        )
+    # extraction reads the documents directly (one scan, no shuffle);
+    # its span-validity filter matches quarantine.split_spans for every
+    # kind it consumes, so triples equal the extraction over ``spans``
+    # (tests/test_pipeline.py)
+    trips = st("triples", lambda: triples.all_triples_fused(docs, reference_strict))
     nodes_df = st("nodes", lambda: graph.nodes(trips))
     edges_df = st("edges", lambda: graph.edges(trips))
     return {

@@ -1,6 +1,7 @@
 """Local stand-in for the driver's CORRECTNESS check: run each
 ``queries()`` entry on Spark and its ``oracle_sql()`` twin on DuckDB at
-sf0.01, compare row count, column names, and order-insensitive values.
+sf0.01, compare row count, column names, and order-insensitive values
+(``oracles.compare``).
 
 Usage: python scripts/check_oracles.py [name ...]
 """
@@ -9,39 +10,20 @@ from __future__ import annotations
 
 import sys
 
-import duckdb
-import numpy as np
-import pandas as pd
-
 sys.path.insert(0, ".")
 
 import __spark_entry__ as entry  # noqa: E402
+from pdf2ontology_spark import oracles  # noqa: E402
 from pdf2ontology_spark.session import get_spark  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.01"
-
-
-def canon(df: pd.DataFrame) -> pd.DataFrame:
-    df = df.reindex(sorted(df.columns), axis=1)
-    for c in df.columns:
-        if df[c].dtype == object:
-            df[c] = df[c].astype(str)
-        elif np.issubdtype(df[c].dtype, np.datetime64):
-            df[c] = df[c].astype("datetime64[us]").astype(str)
-        elif np.issubdtype(df[c].dtype, np.floating):
-            df[c] = df[c].round(6)
-        else:
-            df[c] = df[c].astype("float64").round(6)
-    return df.sort_values(list(df.columns)).reset_index(drop=True)
 
 
 def main() -> int:
     only = set(sys.argv[1:])
     spark = get_spark(shuffle_partitions=16)
     spark.sparkContext.setLogLevel("ERROR")
-    con = duckdb.connect()
-    for t in entry.tables.DRIVER_TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
+    con = oracles.duckdb_views(SF_DIR)
     qs, os_ = entry.queries(), entry.oracle_sql()
     failed = []
     for name, fn in qs.items():
@@ -62,20 +44,9 @@ def main() -> int:
             print(f"FAIL {name}: duckdb error: {e}")
             failed.append(name)
             continue
-        if len(got) != len(exp):
-            print(f"FAIL {name}: rows spark={len(got)} duckdb={len(exp)}")
-            failed.append(name)
-            continue
-        if sorted(got.columns) != sorted(exp.columns):
-            print(f"FAIL {name}: cols spark={sorted(got.columns)} duckdb={sorted(exp.columns)}")
-            failed.append(name)
-            continue
-        g, e = canon(got), canon(exp)
-        if not g.equals(e):
-            neq = (g != e) & ~(g.isna() & e.isna())
-            bad = neq.any(axis=1)
-            print(f"FAIL {name}: {int(bad.sum())}/{len(g)} rows differ; first diffs:")
-            print(pd.concat([g[bad].head(3), e[bad].head(3)], keys=["spark", "duckdb"]))
+        err = oracles.compare(got, exp)
+        if err is not None:
+            print(f"FAIL {name}: {err}")
             failed.append(name)
             continue
         print(f"OK   {name}: rows={len(got)}")

@@ -87,4 +87,4 @@ def test_quarantine_split_accounts_for_every_row(spark):
     # the pipeline keeps running on the good side — no exception path
     from pdf2ontology_spark.operators import segment
 
-    assert segment.doc_stats(good).count() == 1
+    assert segment.merged_text_sentences(good).count() == 1

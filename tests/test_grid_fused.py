@@ -1,62 +1,13 @@
-"""Round-7 fused grid family (operators/grid_fused.py) must be
-row-for-row identical to the staged operators it replaced on the query
-path — the same corpora the driver checks, full-output exceptAll both
-ways."""
+"""Edge cases of the grid kernel (operators/grid_fused.py); its
+corpus-level behaviour is gated against the DuckDB oracles in
+tests/test_oracles.py."""
 
-from pyspark.sql import functions as F
-
-import __spark_entry__ as entry
-from pdf2ontology_spark.operators import grid, grid_fused
-from pdf2ontology_spark.sources import tables
-
-SF = "/root/testdata/sf0.001"
-
-
-def _maps_str(maps):
-    return maps.select(
-        "doc_id",
-        "table_id",
-        "row",
-        F.array_join(
-            F.transform(
-                F.map_entries("row_map"),
-                lambda e: F.concat_ws("=", e["key"], e["value"]),
-            ),
-            "|",
-        ).alias("s"),
-    )
-
-
-def _same(a, b):
-    assert a.exceptAll(b).count() == 0
-    assert b.exceptAll(a).count() == 0
-
-
-def test_assign_fused_equals_staged(spark):
-    staged, _ = entry._grid_assigned(spark, SF)
-    _same(
-        staged.select("doc_id", "table_id", "cell_id", "row", "col", "text"),
-        grid_fused.assign_cells_fused(tables.load_detections(spark, SF)),
-    )
-
-
-def test_spanning_fused_equals_staged(spark):
-    staged = entry._grid_final(spark, SF).select(
-        "doc_id", "table_id", "row", "col", "text", "cell_type", "rowspan", "colspan"
-    )
-    _same(staged, grid_fused.spanning_cells_fused(tables.load_detections(spark, SF)))
-
-
-def test_row_maps_fused_equals_staged(spark):
-    fin = entry._grid_final(spark, SF).filter(F.col("cell_type") != "empty")
-    staged = _maps_str(grid.grid_to_row_maps(grid.expand_spans(fin)))
-    fused = _maps_str(grid_fused.row_maps_fused(tables.load_detections(spark, SF)))
-    _same(staged, fused)
+from pdf2ontology_spark.operators import grid_fused
 
 
 def test_fused_handles_missing_band_family(spark):
     """A table lacking either band family must drop its cells — the
-    staged inner-join contract."""
+    oracle's inner joins on both band families."""
     d = spark.createDataFrame(
         [
             ("d1", "t1", "row", "r0", 0.0, 0.0, 1.0, 0.1, None),
@@ -70,13 +21,14 @@ def test_fused_handles_missing_band_family(spark):
 
 
 def test_fused_tie_break_keeps_first_band(spark):
-    """Equidistant band centers: the lowest-index band wins (the staged
-    strictly-less argmin)."""
+    """Equidistant band centers: the lowest-index band wins (strictly-less
+    argmin; the oracle orders ties by band idx)."""
+    # binary-exact coordinates: both distances are exactly 0.25
     rows = [
-        ("d1", "t1", "row", "r0", 0.0, 0.0, 1.0, 0.2, None),  # center 0.1
-        ("d1", "t1", "row", "r1", 0.0, 0.2, 1.0, 0.2, None),  # center 0.3
-        ("d1", "t1", "column", "c0", 0.0, 0.0, 0.4, 1.0, None),
-        ("d1", "t1", "cell", "x0", 0.0, 0.15, 0.1, 0.1, "v"),  # cy=0.2: tie
+        ("d1", "t1", "row", "r0", 0.0, 0.0, 1.0, 0.5, None),  # center 0.25
+        ("d1", "t1", "row", "r1", 0.0, 0.5, 1.0, 0.5, None),  # center 0.75
+        ("d1", "t1", "column", "c0", 0.0, 0.0, 0.5, 1.0, None),
+        ("d1", "t1", "cell", "x0", 0.0, 0.25, 0.25, 0.5, "v"),  # cy=0.5: tie
     ]
     d = spark.createDataFrame(
         rows,

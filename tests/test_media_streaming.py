@@ -73,7 +73,9 @@ def test_stream_matches_batch(spark, tmp_path):
 
     streamed = spark.read.parquet(out_dir)
     spans = segment.explode_spans(docs)
-    batch = triples.all_triples(spans, tabulate.semantic_entries(tabulate.table_cells(spans)))
+    batch = triples.table_triples(
+        tabulate.semantic_entries(tabulate.table_cells(spans))
+    ).unionByName(triples.text_triples(spans))
     cols = batch.columns
     assert streamed.select(*cols).exceptAll(batch).count() == 0
     assert batch.exceptAll(streamed.select(*cols)).count() == 0

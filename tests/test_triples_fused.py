@@ -22,9 +22,9 @@ def _spans(spark):
 
 def _composed(spark, strict=False):
     sp = _spans(spark)
-    return triples.all_triples(
-        sp, tabulate.semantic_entries(tabulate.table_cells(sp)), strict
-    )
+    return triples.table_triples(
+        tabulate.semantic_entries(tabulate.table_cells(sp)), strict
+    ).unionByName(triples.text_triples(sp))
 
 
 def _assert_same_multiset(a, b):
@@ -107,9 +107,9 @@ def _staged_raw(spark, docs):
     contain only quarantine-valid spans for the comparison to be
     meaningful."""
     sp = segment.explode_spans(docs)
-    return triples.all_triples(
-        sp, tabulate.semantic_entries(tabulate.table_cells(sp))
-    )
+    return triples.table_triples(
+        tabulate.semantic_entries(tabulate.table_cells(sp))
+    ).unionByName(triples.text_triples(sp))
 
 
 def test_fused_null_text_matches_staged(spark):
