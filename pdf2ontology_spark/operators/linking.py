@@ -22,7 +22,15 @@ Pipeline (all DataFrame ops):
 3. fuzzy pairs between representatives = MinHash-LSH band match AND
    char-3-gram Jaccard >= threshold. LSH bounds the self-join; the
    Jaccard check removes banding false positives. Signatures are
-   computed once per distinct key, not once per surface.
+   computed once per distinct key, not once per surface, and in-row
+   (``array_min`` over the rep's gram digests: no shingle explode, no
+   groupBy exchange). The gram arrays ride the band rows, so the size
+   prefilter and the exact Jaccard run on the band join's own output:
+   no gram-dimension joins, one pair ``distinct``; the candidate plan
+   has 4 exchanges, not 10. The arrays crossing the band join shuffle
+   fewer bytes than the shingle groupBy and the two dimension joins
+   they replace: canonicalize shuffled 401 KB vs 506 KB on a traced
+   sf0.001 pass (perfbench ``operators.linking.shuffle_bytes``).
 4. connected components (components.connected_components) over the
    bridge edges — iterative self-joins, the north-rule canonicalization.
 5. canonical_nodes/canonical_edges: groupBy component, representative =
@@ -81,83 +89,69 @@ def _fuzzy_base(reps: DataFrame) -> DataFrame:
     )
 
 
-def banded_candidates(fuzzy_base: DataFrame, with_sizes: bool = False) -> DataFrame:
-    """Raw LSH band-collision pairs (id_a < id_b) between reps — the
-    blocking stage only, before any verification. ``with_sizes=True``
-    additionally carries |grams| through the band rows as (na, nb) —
-    one extra int per shuffled band row, which lets the size prefilter
-    run inline on the join output instead of via two dimension joins
-    (round-7: those joins were two of the candidate pipeline's ~10
-    shuffle stages, pure overhead at every scale since the band rows
-    carry the int anyway)."""
-    sh = fuzzy_base.select(
-        "surface_id", "entity_type", "grams", F.explode("grams").alias("shingle")
-    )
+def band_pairs(fuzzy_base: DataFrame) -> DataFrame:
+    """LSH band-collision rows (id_a < id_b), one per colliding band,
+    each carrying both gram arrays (ga, gb) — the blocking stage, before
+    any verification. Reps with null or empty ``grams`` have no
+    signature and stay out of banding."""
     # LSH_K independent md5('i:'||gram) digests per gram — NOT the
     # document dedup's one-digest mix family: the surfaces input is
     # tiny (distinct normalized keys, ~8 grams each) so the digest
     # cost is immaterial here, while the recall of specific near-dup
     # name pairs is fixture-pinned (tests/test_linking.py) and the
     # banding draw of this family is the one those pins encode.
-    # SQL-string aggregates: identical md5('i:'||gram) digests, one
-    # parse per slot instead of ~6 py4j round-trips (see dedup.simhash)
-    aggs = [
-        F.expr(f"min(substring(md5(concat('{i}:', shingle)), 1, 16)) AS mh_{i}")
+    # In-row: the min over a rep's own gram array equals the
+    # explode + groupBy-per-surface min (tests/test_linking.py), with
+    # no exchange; SQL strings, one parse per slot (see dedup.simhash)
+    mh = [
+        F.expr(f"array_min(transform(grams, g -> substring(md5(concat('{i}:', g)), 1, 16)))")
         for i in range(LSH_K)
     ]
-    # |grams| for free: sh is one row per DISTINCT gram, so count(*)
-    # per surface is exactly size(grams)
-    sig = sh.groupBy("surface_id", "entity_type").agg(
-        *aggs, F.count("*").cast("int").alias("ng")
-    )
     r = LSH_K // LSH_BANDS
     band_structs = [
         F.struct(
             F.lit(b).alias("band"),
-            F.md5(F.concat_ws("|", *[F.col(f"mh_{b * r + j}") for j in range(r)])).alias(
-                "band_key"
-            ),
+            F.md5(F.concat_ws("|", *mh[b * r : (b + 1) * r])).alias("band_key"),
         )
         for b in range(LSH_BANDS)
     ]
-    bands = sig.select(
-        "surface_id", "entity_type", "ng", F.explode(F.array(*band_structs)).alias("bb")
-    ).select("surface_id", "entity_type", "ng", "bb.band", "bb.band_key")
-
+    bands = (
+        fuzzy_base.filter(F.size("grams") > 0)
+        .select("surface_id", "entity_type", "grams", F.explode(F.array(*band_structs)).alias("bb"))
+        .select("surface_id", "entity_type", "grams", "bb.band", "bb.band_key")
+    )
     a = bands.select(
-        F.col("surface_id").alias("id_a"), F.col("ng").alias("na"),
+        F.col("surface_id").alias("id_a"), F.col("grams").alias("ga"),
         "entity_type", "band", "band_key",
     )
     b = bands.select(
-        F.col("surface_id").alias("id_b"), F.col("ng").alias("nb"),
+        F.col("surface_id").alias("id_b"), F.col("grams").alias("gb"),
         "entity_type", "band", "band_key",
     )
-    joined = a.join(b, ["entity_type", "band", "band_key"]).filter(
-        F.col("id_a") < F.col("id_b")
+    return (
+        a.join(b, ["entity_type", "band", "band_key"])
+        .filter(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b", "ga", "gb")
     )
-    cols = ["id_a", "id_b", "na", "nb"] if with_sizes else ["id_a", "id_b"]
-    return joined.select(*cols).distinct()
 
 
-def prefiltered_candidates(fuzzy_base: DataFrame) -> DataFrame:
-    """Band candidates passed through the SIZE prefilter.
+def banded_candidates(fuzzy_base: DataFrame) -> DataFrame:
+    """Distinct raw LSH band-collision pairs (id_a, id_b)."""
+    return band_pairs(fuzzy_base).select("id_a", "id_b").distinct()
+
+
+def prefiltered_pairs(fuzzy_base: DataFrame) -> DataFrame:
+    """``band_pairs`` rows that pass the SIZE prefilter.
     Jaccard(A,B) <= min(|A|,|B|)/max(|A|,|B|), so ``min >= t*max``
     (epsilon-slack so float rounding can only over-admit, never wrongly
     drop) is a NECESSARY condition for the threshold — a pure
     prefilter: every surviving pair still gets the exact Jaccard
     verification, so no approximation (hash or otherwise) can ever
-    create a false link. The sizes ride along the band rows
-    (``with_sizes`` — one int, not the wide gram arrays), so the filter
-    is inline on the band join's output: filtering before or after the
-    pair ``distinct`` is equivalent because it depends only on
-    (id_a, id_b)-functional values."""
-    return (
-        banded_candidates(fuzzy_base, with_sizes=True)
-        .filter(
-            F.least("na", "nb")
-            >= F.lit(JACCARD_THRESHOLD) * F.greatest("na", "nb") - F.lit(1e-9)
-        )
-        .select("id_a", "id_b")
+    create a false link. It spares the array intersect/union of
+    mixed-length band collisions."""
+    na, nb = F.size("ga"), F.size("gb")
+    return band_pairs(fuzzy_base).filter(
+        F.least(na, nb) >= F.lit(JACCARD_THRESHOLD) * F.greatest(na, nb) - F.lit(1e-9)
     )
 
 
@@ -165,27 +159,20 @@ def candidate_pairs(reps: DataFrame) -> DataFrame:
     """Fuzzy (id_a, id_b) bridge links between exact-group reps, within
     entity_type. Only non-value types; minhash over char-3-grams of the
     key, banded (LSH_BANDS bands of LSH_K/LSH_BANDS rows); band matches
-    pass the size prefilter (``prefiltered_candidates``) and are then
-    verified with exact Jaccard >= threshold.
+    pass the size prefilter (``prefiltered_pairs``) and are then
+    verified with exact Jaccard >= threshold, both on the band join's
+    own rows.
 
     ``reps`` needs (surface_id, entity_type, key) — one row per distinct
     key (the exact-group representative).
     """
-    fuzzy_base = _fuzzy_base(reps)
-    pre = prefiltered_candidates(fuzzy_base)
-    grams_dim = fuzzy_base.select("surface_id", "grams")
-    verified = (
-        pre.join(grams_dim.withColumnRenamed("surface_id", "id_a").withColumnRenamed("grams", "ga"), "id_a")
-        .join(grams_dim.withColumnRenamed("surface_id", "id_b").withColumnRenamed("grams", "gb"), "id_b")
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("ga", "gb"))
-            / F.size(F.array_union("ga", "gb")),
-        )
-        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
+    jaccard = F.size(F.array_intersect("ga", "gb")) / F.size(F.array_union("ga", "gb"))
+    return (
+        prefiltered_pairs(_fuzzy_base(reps))
+        .filter(jaccard >= JACCARD_THRESHOLD)
         .select("id_a", "id_b")
+        .distinct()
     )
-    return verified.distinct()
 
 
 def canonicalize(triples: DataFrame) -> dict[str, DataFrame]:

@@ -6,24 +6,14 @@ read) — the operator stays declarative and at deployment scale the
 stats come from the catalog instead of a job.
 
 Detection: every job submitted inside the probe runs under a dedicated
-job group; the status tracker must report that group empty."""
+job group (the ``jobs_during`` fixture); the status tracker must report
+that group empty."""
 
 import __spark_entry__ as entry
 from pdf2ontology_spark.operators import dedup, similarity
 from pdf2ontology_spark.sources import tables
 
 SF_DIR = "/root/testdata/sf0.001"
-
-
-def _jobs_during(spark, fn):
-    sc = spark.sparkContext
-    group = "lazy-build-probe"
-    sc.setJobGroup(group, "plan-build laziness probe")
-    try:
-        result = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return result, list(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_table_stats_match_data(spark):
@@ -39,7 +29,7 @@ def _warm_schema_cache(spark):
     tables.load_table(spark, SF_DIR, "embeddings")
 
 
-def test_embedding_pairs_build_is_lazy(spark):
+def test_embedding_pairs_build_is_lazy(spark, jobs_during):
     _warm_schema_cache(spark)
     n = tables.table_rows(SF_DIR, "embeddings")
     dim = tables.embedding_dim(SF_DIR)
@@ -50,12 +40,12 @@ def test_embedding_pairs_build_is_lazy(spark):
         df.schema  # force analysis, not execution
         return df
 
-    df, jobs = _jobs_during(spark, build)
+    df, jobs = jobs_during(build)
     assert jobs == [], f"plan build submitted Spark jobs: {jobs}"
     assert df.count() >= 0  # the lazily built plan still executes
 
 
-def test_ivf_topk_build_is_lazy(spark):
+def test_ivf_topk_build_is_lazy(spark, jobs_during):
     _warm_schema_cache(spark)
     n = tables.table_rows(SF_DIR, "embeddings")
 
@@ -65,15 +55,15 @@ def test_ivf_topk_build_is_lazy(spark):
         df.schema
         return df
 
-    df, jobs = _jobs_during(spark, build)
+    df, jobs = jobs_during(build)
     assert jobs == [], f"plan build submitted Spark jobs: {jobs}"
     assert df.count() > 0
 
 
-def test_entry_embedding_queries_build_lazily(spark):
+def test_entry_embedding_queries_build_lazily(spark, jobs_during):
     """The registered driver queries thread table stats themselves."""
     _warm_schema_cache(spark)
     qs = entry.queries()
     for name in ["embedding_cosine_pairs", "ann_ivf_topk", "ann_lsh_topk"]:
-        _df, jobs = _jobs_during(spark, lambda: qs[name](spark, SF_DIR).schema)
+        _df, jobs = jobs_during(lambda: qs[name](spark, SF_DIR).schema)
         assert jobs == [], f"{name} build submitted Spark jobs: {jobs}"

@@ -28,6 +28,9 @@ ORACLE_GATE = [
     "triples_table_strict",
     "triples_text",
     "relationship_entries",
+    # LSH entity linking: in-row signatures, band-row verification
+    "canonical_nodes_lsh",
+    "canonical_edges_lsh",
 ]
 
 
